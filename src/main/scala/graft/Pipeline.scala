@@ -62,17 +62,22 @@ object Pipeline {
     * §7.4-1), so the store preserves the full event-grain relation and
     * re-ingesting any window is a no-op; hour-level last-write-wins is
     * the CLEAN stage's job, exactly as in the reference (raw_weather
-    * keeps every fetched row, silver_clean.py:99-101 dedups). */
+    * keeps every fetched row, silver_clean.py:99-101 dedups).
+    * `touched` (the batch's `ds` dates, when the caller has them) spares
+    * the merge its own listing. Returns the schema written. */
   def ingestBronze(spark: SparkSession, bronzeRows: DataFrame,
-                   wh: Warehouse): Unit = {
+                   wh: Warehouse,
+                   touched: Option[Seq[java.sql.Date]] = None): StructType = {
     val withBlob =
       if (bronzeRows.columns.contains("raw_json")) bronzeRows
       else bronzeRows.withColumn("raw_json", lit(null).cast(StringType))
-    UpsertWriter.upsertPartitioned(spark, wh.bronze,
-      withBlob.withColumn("ds", to_date($"ts_utc")),
+    val rows = withBlob.withColumn("ds", to_date($"ts_utc"))
+    UpsertWriter.upsertPartitioned(spark, wh.bronze, rows,
       keys = Seq("site", "ts_utc", "ingest_seq"),
       versionCols = Seq("ingested_at"),
-      partitionCol = "ds")
+      partitionCol = "ds",
+      touched = touched)
+    rows.schema
   }
 
   /** Stage 1, events-source flavor: the driver fixture's events table
@@ -133,7 +138,7 @@ object Pipeline {
     val bronzeStore = sinceDs.foldLeft(spark.read.parquet(wh.bronze)) {
       (df, d) => df.filter($"ds" >= lit(java.sql.Date.valueOf(d)))
     }
-    refineSilverSlice(spark, wh, bronzeStore)
+    refineSilverSlice(spark, wh, bronzeStore, None)
   }
 
   /** Touched-partition re-clean (the streaming pipeline's
@@ -143,25 +148,42 @@ object Pipeline {
     * every Bronze row the partition has accumulated, and (site, hour)
     * clean groups never span a `ds` boundary — so after any sequence
     * of bounded re-cleans the touched partitions equal a full
-    * re-clean's. */
+    * re-clean's. For the same reason `touched` is also the Silver
+    * merge's partition list: a date whose rows the clean drops has no
+    * Silver rows to merge. */
   def refineSilverPartitions(spark: SparkSession, wh: Warehouse,
                              touched: Seq[java.sql.Date]): Unit =
     if (touched.nonEmpty)
       refineSilverSlice(spark, wh,
-        spark.read.parquet(wh.bronze).filter($"ds".isin(touched: _*)))
+        dsSlice(spark, wh.bronze, touched, None), Some(touched))
 
+  /** The given `ds` partitions of a store (partition-pruned scan);
+    * `schema`, when the caller has just written the store with it,
+    * spares the footer schema-inference job. */
+  private def dsSlice(spark: SparkSession, path: String,
+                      touched: Seq[java.sql.Date],
+                      schema: Option[StructType]): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(path)
+      .filter($"ds".isin(touched: _*))
+
+  /** Re-clean a Bronze slice and merge it into Silver; returns the
+    * schema written. */
   private def refineSilverSlice(spark: SparkSession, wh: Warehouse,
-                                bronzeSlice: DataFrame): Unit = {
+                                bronzeSlice: DataFrame,
+                                touched: Option[Seq[java.sql.Date]])
+      : StructType = {
     val cleaned = Weather.cleanToHourlyAudit(bronzeSlice.select(
       $"site", $"ts_utc", $"ingest_seq",
       $"ghi_wm2", $"t2m_c", $"ws10_mps", $"ingested_at"))
-    UpsertWriter.upsertPartitioned(spark, wh.silver,
-      cleaned.withColumn("ds", to_date($"ts_utc")),
+      .withColumn("ds", to_date($"ts_utc"))
+    UpsertWriter.upsertPartitioned(spark, wh.silver, cleaned,
       keys = Seq("site", "ts_utc"),
       versionCols = Seq("ingested_at", "ingest_seq"),
       partitionCol = "ds",
       checks = graft.schema.Schemas.factWeatherChecks,
-      table = "fact_weather")
+      table = "fact_weather",
+      touched = touched)
+    cleaned.schema
   }
 
   /** Stage 3 — gold marts from the PUBLISHED Silver store (derived
@@ -188,10 +210,12 @@ object Pipeline {
     * byte-identity), which is what keeps a trickle of late data from
     * re-publishing a 100 TB mart. */
   def refreshMarts(spark: SparkSession, wh: Warehouse,
-                   touched: Seq[java.sql.Date]): Unit = {
-    if (touched.isEmpty) return
-    val silverSlice = spark.read.parquet(wh.silver)
-      .filter($"ds".isin(touched: _*))
+                   touched: Seq[java.sql.Date]): Unit =
+    if (touched.nonEmpty)
+      refreshMartsFrom(spark, wh, dsSlice(spark, wh.silver, touched, None))
+
+  private def refreshMartsFrom(spark: SparkSession, wh: Warehouse,
+                               silverSlice: DataFrame): Unit = {
     def publish(mart: DataFrame, path: String): Unit = {
       val fs = FileSystem.get(new URI(path),
         spark.sparkContext.hadoopConfiguration)
@@ -242,19 +266,27 @@ object Pipeline {
     * The re-clean reads the PUBLISHED Bronze partitions (not just the
     * batch), so rows of one (site, hour) split across micro-batches
     * converge identically to the batch clean — and the driver only
-    * ever sees the touched date list, never data. */
+    * ever sees the touched date list, never data.
+    *
+    * Every step runs once: the touched dates are collected once (an
+    * empty list is an empty batch) and feed the Bronze merge, the
+    * Silver re-clean/merge and the mart refresh; each merge writes
+    * straight into its store; and the Bronze and Silver slices are
+    * read back with the schema this step just wrote them with, so no
+    * footer schema inference runs. */
   private def microBatchStep(bronzeBatch: DataFrame, wh: Warehouse): Unit = {
     val sp = bronzeBatch.sparkSession
-    // consumed by the Bronze upsert AND the touched-ds listing: persist
+    // consumed by the touched-ds listing AND the Bronze upsert: persist
     // once so the file-stream source isn't re-read per consumer
     val batch = bronzeBatch.cache()
     try {
-      if (!batch.isEmpty) {
-        ingestBronze(sp, batch, wh)
-        val touched = batch.select(to_date(col("ts_utc")).as("ds"))
-          .distinct().collect().map(_.getDate(0)).toSeq
-        refineSilverPartitions(sp, wh, touched)
-        refreshMarts(sp, wh, touched)
+      val touched = batch.select(to_date(col("ts_utc")))
+        .distinct().collect().map(_.getDate(0)).toSeq
+      if (touched.nonEmpty) {
+        val bronze = ingestBronze(sp, batch, wh, Some(touched))
+        val silver = refineSilverSlice(sp, wh,
+          dsSlice(sp, wh.bronze, touched, Some(bronze)), Some(touched))
+        refreshMartsFrom(sp, wh, dsSlice(sp, wh.silver, touched, Some(silver)))
       }
     } finally { batch.unpersist(); () }
   }

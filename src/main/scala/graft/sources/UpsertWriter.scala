@@ -22,11 +22,16 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
   *
   * Scale notes: the merge is one shuffle on the key columns (both
   * sides hash-partitioned); on a real deployment the table would be a
-  * transactional format (Delta/Iceberg MERGE) — here the swap is a
-  * tmp-write + directory rename, which is the strongest atomicity a
-  * bare filesystem offers. Rewriting the full table per merge is the
-  * textbook copy-on-write trade-off; partitioning the store by
-  * key-prefix (site/date) and merging only touched partitions is the
+  * transactional format (Delta/Iceberg MERGE). The unpartitioned
+  * [[upsert]] swaps by a tmp-write + directory rename, the strongest
+  * atomicity a bare filesystem offers for a whole table. The
+  * partitioned [[upsertPartitioned]] is one shuffle plus one
+  * dynamic-partition-overwrite write straight into the store: its
+  * atomicity comes from the committer, which writes every task's files
+  * under the store's `.spark-staging-<job>` directory and swaps only
+  * the written partitions in `commitJob`, so a failed merge leaves the
+  * store as it was. Rewriting the full table per merge is the textbook
+  * copy-on-write trade-off; merging only the touched partitions is the
   * incremental refinement.
   */
 object UpsertWriter {
@@ -98,42 +103,51 @@ object UpsertWriter {
     * `partitionBy(partitionCol)` and only partitions present in
     * `incoming` are read, merged, and rewritten (dynamic partition
     * overwrite). This is the shape that survives 100 TB — a day's
-    * ingest merges a day's partitions, not the table. */
+    * ingest merges a day's partitions, not the table.
+    *
+    * `touched` lists the partition values to merge when the caller
+    * already knows them (a superset of `incoming`'s is exact: an
+    * untouched partition is read and rewritten unchanged); omitted, it
+    * is collected from `incoming`. The store is read with `incoming`'s
+    * schema — one schema per store — so the merge runs no footer
+    * schema-inference job. */
   def upsertPartitioned(spark: SparkSession, path: String,
                         incoming: DataFrame, keys: Seq[String],
                         versionCols: Seq[String],
                         partitionCol: String,
                         checks: Seq[graft.schema.Schemas.Check] = Nil,
-                        table: String = "upsert-target"): Unit = {
+                        table: String = "upsert-target",
+                        touched: Option[Seq[Any]] = None): Unit = {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
+    val exists = fs.exists(new Path(path))
     // the incoming lineage can feed the CHECK aggregate, the touched-
-    // partition listing, AND the merge — persist it once. A fresh
-    // write with no checks has exactly one consumer (the write), so
-    // caching there would be a pure extra materialization.
-    val multiConsumer = checks.nonEmpty || fs.exists(target)
+    // partition listing, AND the merge — persist it once. With a single
+    // consumer (the write) caching would be a pure extra
+    // materialization.
+    val multiConsumer = checks.nonEmpty || (exists && touched.isEmpty)
     val guarded = if (multiConsumer) incoming.cache() else incoming
     try {
       if (checks.nonEmpty)
         graft.schema.Validator.enforce(guarded, checks, table)
-      if (!fs.exists(target)) {
+      if (!exists) {
         guarded.write.partitionBy(partitionCol).parquet(path)
       } else {
-        val touched = guarded.select(partitionCol).distinct()
-          .collect().map(_.get(0)).toSeq
+        val parts = touched.getOrElse(guarded.select(partitionCol).distinct()
+          .collect().map(_.get(0)).toSeq)
         // partition filter prunes the scan to touched partitions only
-        val existingSlice = spark.read.parquet(path)
-          .filter(col(partitionCol).isin(touched: _*))
-        val merged = merge(existingSlice, guarded, keys, versionCols)
-        // stage: the merge reads the partitions we are about to rewrite
-        val tmp = new Path(path + ".stage-" + UUID.randomUUID().toString.take(8))
-        merged.write.parquet(tmp.toString)
-        spark.read.parquet(tmp.toString)
+        val existingSlice = spark.read.schema(guarded.schema).parquet(path)
+          .filter(col(partitionCol).isin(parts: _*))
+        // The merge reads the very partitions it overwrites, and that is
+        // safe ONLY under dynamic overwrite: its committer writes into
+        // `.spark-staging-<job>` and replaces the written partitions in
+        // commitJob, after every task has read the old files. A static
+        // overwrite can delete them before the job reads them (it does
+        // with AQE off). Never drop the `dynamic` option here.
+        merge(existingSlice, guarded, keys, versionCols)
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCol)
           .parquet(path)
-        fs.delete(tmp, true)
       }
       // invalidate the session's cached file listing for the store
       // (dynamic overwrite replaced files in the touched partitions)

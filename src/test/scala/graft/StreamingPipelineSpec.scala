@@ -67,6 +67,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
        "mart partitions stay byte-identical (incremental refresh IO)") {
     val day1 = 1704067200000000L // 2024-01-01 00:00 UTC, micros
     val day2 = day1 + 86400L * 1000000L
+    val day3 = day2 + 86400L * 1000000L
     def write(events: Seq[(Long, Long, Double)], dir: String): Unit = {
       events.map { case (id, ts, v) => (id, ts * 1000L, 1L, "click", v, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -87,26 +88,50 @@ class StreamingPipelineSpec extends AnyFunSuite {
     assert(d2.length === 1 && d2(0).getAs[Long]("ingest_seq") === 12L,
       "the later micro-batch's higher ingest_seq won the (site, hour)")
 
-    // the IO contract: re-merging ONLY day2 leaves day1's mart
-    // partitions byte-identical (not rewritten), while day2's change
-    val featD1 = partFiles(wh.martFeatures, "2024-01-01")
-    val kpiD1 = partFiles(wh.martKpis, "2024-01-01")
-    val featD2 = partFiles(wh.martFeatures, "2024-01-02")
-    assert(featD1.nonEmpty && featD2.nonEmpty)
+    // the IO contract: re-merging ONLY day2 leaves day1's partitions
+    // byte-identical (not rewritten) in every store, while day2's change
+    val stores = Seq("bronze" -> wh.bronze, "silver" -> wh.silver,
+      "mart_features" -> wh.martFeatures, "mart_kpis" -> wh.martKpis)
+    def snapshot(ds: String): Map[String, Map[String, String]] =
+      stores.map { case (name, path) => name -> partFiles(path, ds) }.toMap
+    val d1Files = snapshot("2024-01-01")
+    val d2Files = snapshot("2024-01-02")
+    assert(d1Files.values.forall(_.nonEmpty) && d2Files.values.forall(_.nonEmpty))
     // a third, even later version arrives as a NEW feed (fresh stream,
     // same warehouse): its only micro-batch touches ds=2024-01-02
     val in2 = TestTmp.dir("graft-spl-in2-").toString
     write(Seq((23L, day2, 60.0)), in2)
     Pipeline.runStreaming(spark, in2, wh, maxFilesPerTrigger = Some(1))
-    assert(partFiles(wh.martFeatures, "2024-01-01") === featD1,
-      "untouched features partition not rewritten")
-    assert(partFiles(wh.martKpis, "2024-01-01") === kpiD1,
-      "untouched KPI partition not rewritten")
-    assert(partFiles(wh.martFeatures, "2024-01-02") !== featD2,
-      "touched partition was rewritten")
+    for ((name, path) <- stores) {
+      assert(partFiles(path, "2024-01-01") === d1Files(name),
+        s"untouched $name partition not rewritten")
+      assert(partFiles(path, "2024-01-02") !== d2Files(name),
+        s"touched $name partition was rewritten")
+    }
     val d2After = spark.read.parquet(wh.silver)
       .filter(to_date($"ts_utc") === lit("2024-01-02")).collect()
     assert(d2After.length === 1 && d2After(0).getAs[Long]("ingest_seq") === 23L)
+
+    // a batch touching day2 (a newer version) and day3, whose only row
+    // the clean drops (event_id % 97 == 0 carries a negative GHI): the
+    // touched list is a strict superset of the cleaned dates, and
+    // Silver still equals the batch kernel over the published Bronze
+    val in3 = TestTmp.dir("graft-spl-in3-").toString
+    write(Seq((34L, day2, 65.0), (97L, day3, 50.0)), in3)
+    Pipeline.runStreaming(spark, in3, wh, maxFilesPerTrigger = Some(1))
+    assert(partFiles(wh.bronze, "2024-01-03").nonEmpty)
+    assert(partFiles(wh.silver, "2024-01-03").isEmpty)
+    val cols = Seq("site", "ts_utc", "ghi_wm2", "temp_c", "wind_mps",
+      "ingested_at", "ingest_seq").map(col)
+    val kernel = Weather.cleanToHourlyAudit(spark.read.parquet(wh.bronze))
+    assert(rows(spark.read.parquet(wh.silver).select(cols: _*)
+        .orderBy("site", "ts_utc"))
+      === rows(kernel.select(cols: _*).orderBy("site", "ts_utc")))
+    assert(rows(spark.read.parquet(wh.silver).select($"ingest_seq")
+      .orderBy("ingest_seq")) === Seq("[1]", "[34]"))
+    for ((name, path) <- stores)
+      assert(partFiles(path, "2024-01-01") === d1Files(name),
+        s"untouched $name partition not rewritten")
   }
 
   test("runNasaIngestStreaming: per-window micro-batches converge to " +

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -746,5 +748,59 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     assert(rows(("d1", "b")) === 2.0)
     assert(rows(("d2", "a")) === 30.0) // newer version won
     assert(rows(("d2", "b")) === 40.0) // inserted
+  }
+
+  /** Content hash of every file under `dir`, keyed by relative path. */
+  private def fileHashes(dir: java.io.File): Map[String, String] = {
+    val base = dir.toPath
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map { f =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+          .digest(Files.readAllBytes(f))
+        base.relativize(f).toString -> md.map("%02x".format(_)).mkString
+      }.toMap
+    finally walk.close()
+  }
+
+  test("a merge that throws mid-job leaves every partition byte-identical " +
+       "and no staging directory beside or under the store") {
+    // AQE off: the posture in which a non-dynamic overwrite deletes the
+    // old partitions before the merge job runs, so dropping the dynamic
+    // mode fails this test too
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val root = TestTmp.dir("graft-pupf-").toFile
+    val path = new java.io.File(root, "t").toString
+    val day1 = s.createDataFrame(Seq(("d1", "a", 1, 1.0), ("d2", "a", 1, 3.0)))
+      .toDF("day", "k", "version", "v")
+    UpsertWriter.upsertPartitioned(s, path, day1,
+      Seq("day", "k"), Seq("version"), "day")
+    val before = fileHashes(new java.io.File(path))
+    assert(before.keys.exists(_.startsWith("day=d2/")))
+    // the repartition keeps the optimizer from folding the UDF over the
+    // local rows on the driver: it throws in a task of the merge job
+    val boom = udf { (v: Double) =>
+      if (v > 0) throw new IllegalStateException("boom in merge") else v }
+    val bad = s.createDataFrame(Seq(("d2", "a", 2, 30.0)))
+      .toDF("day", "k", "version", "v")
+      .repartition(2).withColumn("v", boom(col("v")))
+    val e = intercept[Exception] {
+      UpsertWriter.upsertPartitioned(s, path, bad,
+        Seq("day", "k"), Seq("version"), "day", touched = Some(Seq("d2")))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom in merge")))
+    assert(fileHashes(new java.io.File(path)) === before)
+    assert(s.read.parquet(path).orderBy("day").collect()
+      .map(r => (r.getAs[String]("day"), r.getAs[Double]("v"))).toSeq
+      === Seq("d1" -> 1.0, "d2" -> 3.0))
+    val walk = Files.walk(root.toPath)
+    val leftovers = try walk.iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.contains(".stage-") || n.startsWith(".spark-staging-"))
+      .toList
+    finally walk.close()
+    assert(leftovers.isEmpty)
   }
 }
