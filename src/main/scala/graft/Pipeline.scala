@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 import graft.operators.{Weather, WeatherApi}
 import graft.sources.{NasaIngest, UpsertWriter}
@@ -64,20 +64,19 @@ object Pipeline {
     * the CLEAN stage's job, exactly as in the reference (raw_weather
     * keeps every fetched row, silver_clean.py:99-101 dedups).
     * `touched` (the batch's `ds` dates, when the caller has them) spares
-    * the merge its own listing. Returns the schema written. */
+    * the merge its own listing. */
   def ingestBronze(spark: SparkSession, bronzeRows: DataFrame,
                    wh: Warehouse,
-                   touched: Option[Seq[java.sql.Date]] = None): StructType = {
+                   touched: Option[Seq[java.sql.Date]] = None): Unit = {
     val withBlob =
       if (bronzeRows.columns.contains("raw_json")) bronzeRows
       else bronzeRows.withColumn("raw_json", lit(null).cast(StringType))
-    val rows = withBlob.withColumn("ds", to_date($"ts_utc"))
-    UpsertWriter.upsertPartitioned(spark, wh.bronze, rows,
+    UpsertWriter.upsertPartitioned(spark, wh.bronze,
+      withBlob.withColumn("ds", to_date($"ts_utc")),
       keys = Seq("site", "ts_utc", "ingest_seq"),
       versionCols = Seq("ingested_at"),
       partitionCol = "ds",
       touched = touched)
-    rows.schema
   }
 
   /** Stage 1, events-source flavor: the driver fixture's events table
@@ -154,36 +153,30 @@ object Pipeline {
   def refineSilverPartitions(spark: SparkSession, wh: Warehouse,
                              touched: Seq[java.sql.Date]): Unit =
     if (touched.nonEmpty)
-      refineSilverSlice(spark, wh,
-        dsSlice(spark, wh.bronze, touched, None), Some(touched))
+      refineSilverSlice(spark, wh, dsSlice(spark, wh.bronze, touched),
+        Some(touched))
 
-  /** The given `ds` partitions of a store (partition-pruned scan);
-    * `schema`, when the caller has just written the store with it,
-    * spares the footer schema-inference job. */
+  /** The given `ds` partitions of a store (partition-pruned scan, read
+    * without a schema-inference job). */
   private def dsSlice(spark: SparkSession, path: String,
-                      touched: Seq[java.sql.Date],
-                      schema: Option[StructType]): DataFrame =
-    schema.foldLeft(spark.read)(_.schema(_)).parquet(path)
+                      touched: Seq[java.sql.Date]): DataFrame =
+    UpsertWriter.readStore(spark, path, StructField("ds", DateType))
       .filter($"ds".isin(touched: _*))
 
-  /** Re-clean a Bronze slice and merge it into Silver; returns the
-    * schema written. */
   private def refineSilverSlice(spark: SparkSession, wh: Warehouse,
                                 bronzeSlice: DataFrame,
-                                touched: Option[Seq[java.sql.Date]])
-      : StructType = {
+                                touched: Option[Seq[java.sql.Date]]): Unit = {
     val cleaned = Weather.cleanToHourlyAudit(bronzeSlice.select(
       $"site", $"ts_utc", $"ingest_seq",
       $"ghi_wm2", $"t2m_c", $"ws10_mps", $"ingested_at"))
-      .withColumn("ds", to_date($"ts_utc"))
-    UpsertWriter.upsertPartitioned(spark, wh.silver, cleaned,
+    UpsertWriter.upsertPartitioned(spark, wh.silver,
+      cleaned.withColumn("ds", to_date($"ts_utc")),
       keys = Seq("site", "ts_utc"),
       versionCols = Seq("ingested_at", "ingest_seq"),
       partitionCol = "ds",
       checks = graft.schema.Schemas.factWeatherChecks,
       table = "fact_weather",
       touched = touched)
-    cleaned.schema
   }
 
   /** Stage 3 — gold marts from the PUBLISHED Silver store (derived
@@ -210,12 +203,9 @@ object Pipeline {
     * byte-identity), which is what keeps a trickle of late data from
     * re-publishing a 100 TB mart. */
   def refreshMarts(spark: SparkSession, wh: Warehouse,
-                   touched: Seq[java.sql.Date]): Unit =
-    if (touched.nonEmpty)
-      refreshMartsFrom(spark, wh, dsSlice(spark, wh.silver, touched, None))
-
-  private def refreshMartsFrom(spark: SparkSession, wh: Warehouse,
-                               silverSlice: DataFrame): Unit = {
+                   touched: Seq[java.sql.Date]): Unit = {
+    if (touched.isEmpty) return
+    val silverSlice = dsSlice(spark, wh.silver, touched)
     def publish(mart: DataFrame, path: String): Unit = {
       val fs = FileSystem.get(new URI(path),
         spark.sparkContext.hadoopConfiguration)
@@ -271,9 +261,9 @@ object Pipeline {
     * Every step runs once: the touched dates are collected once (an
     * empty list is an empty batch) and feed the Bronze merge, the
     * Silver re-clean/merge and the mart refresh; each merge writes
-    * straight into its store; and the Bronze and Silver slices are
-    * read back with the schema this step just wrote them with, so no
-    * footer schema inference runs. */
+    * straight into its store; and every store is read with its schema
+    * taken from a part-file footer on the driver, so no
+    * schema-inference job runs. */
   private def microBatchStep(bronzeBatch: DataFrame, wh: Warehouse): Unit = {
     val sp = bronzeBatch.sparkSession
     // consumed by the touched-ds listing AND the Bronze upsert: persist
@@ -283,10 +273,9 @@ object Pipeline {
       val touched = batch.select(to_date(col("ts_utc")))
         .distinct().collect().map(_.getDate(0)).toSeq
       if (touched.nonEmpty) {
-        val bronze = ingestBronze(sp, batch, wh, Some(touched))
-        val silver = refineSilverSlice(sp, wh,
-          dsSlice(sp, wh.bronze, touched, Some(bronze)), Some(touched))
-        refreshMartsFrom(sp, wh, dsSlice(sp, wh.silver, touched, Some(silver)))
+        ingestBronze(sp, batch, wh, Some(touched))
+        refineSilverPartitions(sp, wh, touched)
+        refreshMarts(sp, wh, touched)
       }
     } finally { batch.unpersist(); () }
   }

@@ -3,10 +3,13 @@ package graft.sources
 import java.net.URI
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Idempotent keyed upsert over a file-backed table — the Spark
   * re-expression of the reference's `INSERT ... ON CONFLICT (keys) DO
@@ -108,9 +111,8 @@ object UpsertWriter {
     * `touched` lists the partition values to merge when the caller
     * already knows them (a superset of `incoming`'s is exact: an
     * untouched partition is read and rewritten unchanged); omitted, it
-    * is collected from `incoming`. The store is read with `incoming`'s
-    * schema — one schema per store — so the merge runs no footer
-    * schema-inference job. */
+    * is collected from `incoming`. The store is read through
+    * [[readStore]], so the merge runs no schema-inference job. */
   def upsertPartitioned(spark: SparkSession, path: String,
                         incoming: DataFrame, keys: Seq[String],
                         versionCols: Seq[String],
@@ -135,7 +137,7 @@ object UpsertWriter {
         val parts = touched.getOrElse(guarded.select(partitionCol).distinct()
           .collect().map(_.get(0)).toSeq)
         // partition filter prunes the scan to touched partitions only
-        val existingSlice = spark.read.schema(guarded.schema).parquet(path)
+        val existingSlice = readStore(spark, path, guarded.schema(partitionCol))
           .filter(col(partitionCol).isin(parts: _*))
         // The merge reads the very partitions it overwrites, and that is
         // safe ONLY under dynamic overwrite: its committer writes into
@@ -153,5 +155,33 @@ object UpsertWriter {
       // (dynamic overwrite replaced files in the touched partitions)
       spark.catalog.refreshByPath(path)
     } finally if (multiConsumer) guarded.unpersist()
+  }
+
+  /** The partitioned parquet store at `path`, read with the schema
+    * `spark.read.parquet` would infer for it: the Spark schema one part
+    * file's footer records, plus the `partition` column. The footer is
+    * read on the driver — inference would launch a Spark job per read,
+    * which a micro-batch pays on every store it touches. A store with
+    * no part file (or a footer without a Spark schema) falls back to
+    * plain inference. */
+  def readStore(spark: SparkSession, path: String,
+                partition: StructField): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(new URI(path), conf)
+    val visible = (s: FileStatus) =>
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    val part = fs.listStatus(new Path(path)).iterator
+      .filter(s => s.isDirectory && visible(s))
+      .flatMap(d => fs.listStatus(d.getPath)
+        .find(s => s.isFile && visible(s) && s.getPath.getName.endsWith(".parquet")))
+      .nextOption()
+    val data = part.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val meta = try reader.getFileMetaData.getKeyValueMetaData
+                 finally reader.close()
+      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+    }.map(DataType.fromJson).collect { case s: StructType => s }
+    data.fold(spark.read.parquet(path))(d =>
+      spark.read.schema(StructType(d.fields :+ partition)).parquet(path))
   }
 }

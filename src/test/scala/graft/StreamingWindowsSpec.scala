@@ -750,6 +750,31 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     assert(rows(("d2", "b")) === 40.0) // inserted
   }
 
+  test("the merge reads the store with its footer schema: a narrower " +
+       "stored type widens, a column only the store has fails loudly") {
+    val path = TestTmp.dir("graft-pups-").toString + "/t"
+    UpsertWriter.upsertPartitioned(spark, path,
+      Seq(("d1", "a", 1, 1, "x"), ("d2", "a", 1, 3, "y"))
+        .toDF("day", "k", "version", "v", "note"),
+      Seq("day", "k"), Seq("version"), "day")
+    val before = fileHashes(new java.io.File(path))
+    // `note` exists only in the store: the merge must not drop it
+    intercept[org.apache.spark.sql.AnalysisException] {
+      UpsertWriter.upsertPartitioned(spark, path,
+        Seq(("d2", "a", 2, 30)).toDF("day", "k", "version", "v"),
+        Seq("day", "k"), Seq("version"), "day")
+    }
+    assert(fileHashes(new java.io.File(path)) === before)
+    // int `v` in the store, long `v` arriving: the union widens
+    UpsertWriter.upsertPartitioned(spark, path,
+      Seq(("d2", "b", 1, 4L, "z")).toDF("day", "k", "version", "v", "note"),
+      Seq("day", "k"), Seq("version"), "day")
+    assert(spark.read.parquet(path + "/day=d2").orderBy("k").collect()
+      .map(r => (r.getAs[String]("k"), r.getAs[Long]("v"),
+        r.getAs[String]("note"))).toSeq
+      === Seq(("a", 3L, "y"), ("b", 4L, "z")))
+  }
+
   /** Content hash of every file under `dir`, keyed by relative path. */
   private def fileHashes(dir: java.io.File): Map[String, String] = {
     val base = dir.toPath
